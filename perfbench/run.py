@@ -107,7 +107,6 @@ class Run:
         self.failed = 0
         self.errors: list[str] = []
         self.check_s = 0.0
-        self.deadline = time.time() + WORKER_TIMEOUT_S
 
     def rep(self, traced: bool = False) -> dict | None:
         """One worker process; returns its measurements, or None if it
@@ -150,7 +149,7 @@ class Run:
                 cwd=rep_dir, env=env, stdout=log, stderr=subprocess.STDOUT, start_new_session=True,
             )
             try:
-                code = proc.wait(timeout=max(5.0, self.deadline - time.time()))
+                code = proc.wait(timeout=WORKER_TIMEOUT_S)
             except subprocess.TimeoutExpired:
                 code = None
             finally:

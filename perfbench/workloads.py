@@ -6,9 +6,6 @@ run by the parent process outside the timed region.
   injected fetchers serving generated manifest pages and workbooks.
 - ``stream_mv``: ``run_streaming_mv_maintenance`` over a generated event
   log, one micro-batch per shard.
-- ``curation``: ``curate_documents(materialize=True)`` writing the curated
-  corpus, then the ``dedup_embedding_cosine`` and ``docs_classifier_score``
-  registry queries, over a generated corpus and embedding table.
 """
 
 from __future__ import annotations
@@ -127,6 +124,9 @@ def _compare(got, want, label: str) -> list[str]:
     return errors
 
 
+_ORACLE_CACHE: dict[str, tuple] = {}
+
+
 def check_aspep(inputs: str, meta: dict, out: dict) -> list[str]:
     """The combined fact against the generator's ground truth; the stats
     artifacts against the pandas oracle of the reference's semantics."""
@@ -166,10 +166,15 @@ def check_aspep(inputs: str, meta: dict, out: dict) -> list[str]:
     if extra != len(YEARS) - 1:
         errors.append(f"combined_data: {extra} rows beyond the generated ones, expected {len(YEARS) - 1}")
 
-    stats = derive_stats_oracle(comb)
-    errors += _compare(_load_json_gz(out["artifacts"]["derived_stats"]), stats, "derived_stats")
-    errors += _compare(_load_json_gz(out["artifacts"]["extended_stats"]),
-                       derive_extended_stats_oracle(stats), "extended_stats")
+    # The oracle is a function of the combined fact alone, so a run computes
+    # it once and reuses it for every repetition whose fact is identical.
+    comb = comb.sort_values(_KEYS).reset_index(drop=True)
+    cached = _ORACLE_CACHE.get(inputs)
+    if cached is None or not cached[0].equals(comb):
+        stats = derive_stats_oracle(comb)
+        cached = _ORACLE_CACHE[inputs] = (comb, stats, derive_extended_stats_oracle(stats))
+    errors += _compare(_load_json_gz(out["artifacts"]["derived_stats"]), cached[1], "derived_stats")
+    errors += _compare(_load_json_gz(out["artifacts"]["extended_stats"]), cached[2], "extended_stats")
     return errors
 
 
@@ -247,10 +252,8 @@ def _oracle(inputs: str, sql: str):
 
     con = duckdb.connect()
     try:
-        for table in ("documents", "embeddings", "events"):
-            path = os.path.join(inputs, f"{table}.parquet")
-            if os.path.exists(path):
-                con.sql(f"CREATE VIEW {table} AS SELECT * FROM read_parquet('{path}')")
+        path = os.path.join(inputs, "events.parquet")
+        con.sql(f"CREATE VIEW events AS SELECT * FROM read_parquet('{path}')")
         return con.sql(sql).df()
     finally:
         con.close()
@@ -278,61 +281,7 @@ def check_stream(inputs: str, meta: dict, out: dict) -> list[str]:
     return errors + _registry_mismatch("final MV", out["columns"], out["rows"], want)
 
 
-# ---------------------------------------------------------------------------
-# curation
-# ---------------------------------------------------------------------------
-
-CURATION_QUERIES = ("dedup_embedding_cosine", "docs_classifier_score")
-
-
-def run_curation(spark, inputs: str, work: str, meta: dict, tracer) -> dict:
-    from contextlib import nullcontext
-
-    from __spark_entry__ import queries
-    from aspep_etl_spark.plans import curation
-
-    span = tracer.span if tracer is not None else (lambda name: nullcontext())
-    if tracer is not None:
-        tracer.wrap(curation, "_t", "sources.load_table")
-        for attr in ("jaccard_pairs", "connected_components", "decontaminate"):
-            tracer.wrap(curation, attr, f"operators.{attr}")
-    with span("plans.curate"):
-        stages = curation.curate_documents(spark, inputs, materialize=True)
-    curated = os.path.join(work, "curated")
-    with span("sinks.curated_write"):
-        stages["curated"].write.parquet(curated)
-    results = {}
-    registry = queries()
-    for name in CURATION_QUERIES:
-        with span("plans.build"):
-            df = registry[name](spark, inputs)
-        with span(f"operators.{name}"):
-            results[name] = {"columns": df.columns, "rows": [tuple(r) for r in df.collect()]}
-    return {"curated": curated, "results": results, "store_files": _data_files(curated)}
-
-
-def check_curation(inputs: str, meta: dict, out: dict) -> list[str]:
-    """The curated corpus (doc ids and splits) against the curation funnel's
-    DuckDB oracle; each registry query against its own oracle."""
-    import pyarrow.parquet as pq
-
-    from __spark_entry__ import oracle_sql
-
-    sqls = oracle_sql()
-    funnel = sqls["llm_curation_funnel"]
-    tail = funnel.rfind("SELECT '0_raw'")
-    if tail < 0:
-        return ["curation: the funnel oracle no longer ends in its stage-count SELECT"]
-    want = _oracle(inputs, funnel[:tail] + "SELECT doc_id, split FROM cur")
-    got = pq.read_table(out["curated"], columns=["doc_id", "split"]).to_pylist()
-    errors = _registry_mismatch("curated", ["doc_id", "split"], [(r["doc_id"], r["split"]) for r in got], want)
-    for name, res in out["results"].items():
-        errors += _registry_mismatch(name, res["columns"], res["rows"], _oracle(inputs, sqls[name]))
-    return errors
-
-
 WORKLOADS = {
     "aspep_annual": (run_aspep, check_aspep),
     "stream_mv": (run_stream, check_stream),
-    "curation": (run_curation, check_curation),
 }
