@@ -18,7 +18,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 
 from ..sinks.publish import gzip_publish, write_canonical_store, write_json_array
-from ..sources.excel import ingest_grids, parse_workbook_bytes
+from ..sources.excel import ingest_grids, parse_workbook_bytes, parse_workbook_files
 from ..sources.manifest import build_year_url_mapping, download_workbooks
 from .pipeline import derive_extended_stats, derive_stats
 
@@ -63,11 +63,11 @@ def run_aspep_job(
         mapping = build_year_url_mapping(mapping_file, fetch=fetch) if fetch else {}
         files, bad_dl = download_workbooks(mapping, paths.raw_dir, fetch_bytes)
         bad_files += bad_dl
-        grids_by_year = {}
-        for year, path in files.items():
-            with open(path, "rb") as f:
-                raw = f.read()
-            grids_by_year[int(year)] = parse_workbook_bytes(raw, path, int(year))
+        # a corrupt workbook quarantines its year, like a failed download;
+        # the parser is this module's name, so a wrapper installed on it
+        # sees every call
+        grids_by_year, bad_parse = parse_workbook_files(files, parse_workbook_bytes)
+        bad_files += bad_parse
 
     fact, bad_ingest = ingest_grids(spark, grids_by_year, census_dim)
     bad_files += bad_ingest

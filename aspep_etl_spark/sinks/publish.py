@@ -19,9 +19,12 @@ import gzip
 import json
 import math
 import os
+import shutil
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.conversion import ArrowTableToRowsConversion
 
 
 def write_canonical_store(
@@ -73,37 +76,59 @@ def _fmt_string(s: str) -> str:
     return json.dumps(s).replace("/", "\\/")
 
 
-def _fmt_scalar(v) -> str:
-    if v is None:
-        return "null"
-    if isinstance(v, bool):
-        return "true" if v else "false"
-    if isinstance(v, float):
-        if math.isnan(v) or math.isinf(v):
-            return "null"
-        return _fmt_float(v)
-    if isinstance(v, int):
-        return str(v)
-    if isinstance(v, str):
-        return _fmt_string(v)
-    return _fmt_string(str(v))  # dates etc. — stringified, like default=str
+def _column_cells(col, data_type) -> list[str]:
+    """One Arrow column → its rendered JSON values, the formatter chosen
+    once from the column's Arrow type.
+
+    pandas dtype parity: the reference pipeline holds any numeric column
+    containing a missing value as float64, so its integers serialize as
+    "0.0" there — an integer column with some (not all) nulls renders as
+    floats, or the bytes (and round-trips through pandas) diverge."""
+    t = col.type
+    values = col.to_pylist()
+    if pa.types.is_floating(t) or (pa.types.is_integer(t) and 0 < col.null_count < len(col)):
+        return [
+            "null" if v is None or math.isnan(v) or math.isinf(v) else _fmt_float(float(v))
+            for v in values
+        ]
+    if pa.types.is_integer(t):
+        return ["null" if v is None else str(v) for v in values]
+    if pa.types.is_boolean(t):
+        return ["null" if v is None else ("true" if v else "false") for v in values]
+    if pa.types.is_string(t) or pa.types.is_large_string(t):
+        memo: dict = {None: "null"}
+        out = []
+        for v in values:
+            s = memo.get(v)
+            if s is None:
+                s = memo[v] = _fmt_string(v)
+            out.append(s)
+        return out
+    # dates, timestamps, decimals, nested types: the value a collected Row
+    # would hold (naive local-time datetimes, Rows, dicts), stringified
+    conv = ArrowTableToRowsConversion._create_converter(data_type)
+    return ["null" if v is None else _fmt_string(str(conv(v))) for v in values]
 
 
-def render_records_json(records: list[dict], indent: int = 4) -> str:
-    """Serialize records exactly as the reference artifact writer does
-    (pandas ``to_json(orient="records", indent=4)``, assets.py:325,380,486):
-    no space after ``:``, indent-nested braces, ``[\\n\\n]`` for empty."""
-    if not records:
+def _render_table(table: pa.Table, schema, indent: int = 4) -> str:
+    """Serialize an Arrow table exactly as the reference artifact writer
+    does (pandas ``to_json(orient="records", indent=4)``,
+    assets.py:325,380,486): no space after ``:``, indent-nested braces,
+    ``[\\n\\n]`` for empty.  Rendered column by column; each key is escaped
+    once.  A repeated column name keeps its first position and its last
+    value, as the record dicts of a collected Row did."""
+    if table.num_rows == 0:
         return "[\n\n]"
     pad_k = " " * (indent * 2)
     pad_b = " " * indent
-    blocks = []
-    for rec in records:
-        body = ",\n".join(
-            f"{pad_k}{_fmt_string(str(k))}:{_fmt_scalar(v)}" for k, v in rec.items()
-        )
-        blocks.append(f"{pad_b}{{\n{body}\n{pad_b}}}")
-    return "[\n" + ",\n".join(blocks) + "\n]"
+    last = {name: i for i, name in enumerate(table.column_names)}
+    columns = []
+    for name, i in last.items():
+        key = f"{pad_k}{_fmt_string(str(name))}:"
+        columns.append([key + v for v in _column_cells(table.column(i), schema[i].dataType)])
+    head, tail = f"{pad_b}{{\n", f"\n{pad_b}}}"
+    rows = zip(*columns) if columns else [()] * table.num_rows
+    return "[\n" + ",\n".join(head + ",\n".join(r) + tail for r in rows) + "\n]"
 
 
 #: write_json_array refuses DataFrames larger than this — the single-file
@@ -127,33 +152,24 @@ def write_json_array(
     instead of a driver OOM (checked with a ``limit(max_rows+1)`` probe,
     never a full count of the offending table).
     """
-    rows = df.take(max_rows + 1)
-    if len(rows) > max_rows:
+    capped = df.limit(max_rows + 1)
+    table = capped.toArrow()
+    if not df.columns:  # Arrow batches without columns carry no row count
+        table = pa.table([pa.nulls(capped.count())], names=["_"]).select([])
+    if table.num_rows > max_rows:
         raise ValueError(
             f"write_json_array: more than {max_rows} rows — this artifact is "
             f"driver-side single-file JSON; write the parquet store instead"
         )
-    records = [row.asDict() for row in rows]
-    # pandas dtype parity: the reference pipeline holds any numeric column
-    # containing a missing value as float64, so its integers serialize as
-    # "0.0" there — reproduce that column-level coercion or the bytes (and
-    # round-trips through pandas) diverge.
-    null_cols = {
-        c
-        for c in df.columns
-        if any(r[c] is None for r in records)
-        and any(
-            isinstance(r[c], int) and not isinstance(r[c], bool) for r in records
-        )
-    }
-    for r in records:
-        for c in null_cols:
-            if isinstance(r[c], int) and not isinstance(r[c], bool):
-                r[c] = float(r[c])
     os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
     with open(path, "w") as f:
-        f.write(render_records_json(records, indent=indent))
+        f.write(_render_table(table, df.schema, indent=indent))
     return path
+
+
+#: Read size for ``gzip_publish``: a few GzipFile.write calls per
+#: artifact, not one per line of pretty-printed JSON.
+_GZIP_CHUNK = 16 * 1024 * 1024
 
 
 def gzip_publish(local_path: str) -> str:
@@ -161,7 +177,7 @@ def gzip_publish(local_path: str) -> str:
     (reference assets.py:91-97)."""
     out = f"{local_path}.gz"
     with open(local_path, "rb") as f_in, gzip.open(out, "wb") as f_out:
-        f_out.writelines(f_in)
+        shutil.copyfileobj(f_in, f_out, _GZIP_CHUNK)
     return out
 
 

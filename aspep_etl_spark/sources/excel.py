@@ -126,23 +126,33 @@ def _to_canonical(pdf: pd.DataFrame, year: int) -> pd.DataFrame:
     return out
 
 
-def grids_from_raw_dir(raw_dir: str) -> tuple[dict[int, pd.DataFrame], list[dict]]:
-    """Parse every ``aspep_{year}.xls[x]`` workbook in a directory into
-    canonical frames (driver-side; parse failures quarantined)."""
+def parse_workbook_files(
+    files: dict[int, str], parse
+) -> tuple[dict[int, pd.DataFrame], list[dict]]:
+    """Parse each year's workbook file into a canonical frame with
+    ``parse(raw, path, year)`` (``parse_workbook_bytes``); a file that
+    fails to read or parse quarantines its year as
+    ``{"year", "file", "reason"}`` instead of aborting the rest."""
     grids: dict[int, pd.DataFrame] = {}
     bad: list[dict] = []
-    for fname in sorted(os.listdir(raw_dir)):
-        m = re.match(r"aspep_(\d{4})\.(xlsx?|XLSX?)$", fname)
-        if not m:
-            continue
-        year = int(m.group(1))
-        path = os.path.join(raw_dir, fname)
+    for year, path in sorted(files.items()):
         try:
             with open(path, "rb") as f:
-                grids[year] = parse_workbook_bytes(f.read(), path, year)
+                grids[int(year)] = parse(f.read(), path, int(year))
         except Exception as exc:  # noqa: BLE001 — quarantine
             bad.append({"year": year, "file": path, "reason": str(exc)})
     return grids, bad
+
+
+def grids_from_raw_dir(raw_dir: str) -> tuple[dict[int, pd.DataFrame], list[dict]]:
+    """Parse every ``aspep_{year}.xls[x]`` workbook in a directory into
+    canonical frames (driver-side; parse failures quarantined)."""
+    files: dict[int, str] = {}
+    for fname in sorted(os.listdir(raw_dir)):
+        m = re.match(r"aspep_(\d{4})\.(xlsx?|XLSX?)$", fname)
+        if m:
+            files[int(m.group(1))] = os.path.join(raw_dir, fname)
+    return parse_workbook_files(files, parse_workbook_bytes)
 
 
 def _read_grid(raw: bytes, filename: str, year: int) -> list[list]:
@@ -191,10 +201,9 @@ def ingest_grids(
     fatal (reference assets.py:317-320).  Returns the normalized canonical
     fact DataFrame plus the quarantine list.
     """
-    from ..operators.setops import union_by_name
     from ..plans.pipeline import normalize_fact
 
-    frames: list[DataFrame] = []
+    pdfs: list[pd.DataFrame] = []
     bad: list[dict] = []
     for year, raw in sorted(grids_by_year.items()):
         if not (maps.START_YEAR <= int(year) < maps.END_YEAR):
@@ -208,13 +217,20 @@ def ingest_grids(
                     pdf = _to_canonical(tidy_2024_to_frame(raw), year)
             else:
                 pdf = _to_canonical(legacy_grid_to_frame(raw, int(year)), year)
-            frames.append(spark.createDataFrame(pdf, schema=schema.aspep_raw_schema()))
+            pdfs.append(pdf)
         except Exception as exc:  # noqa: BLE001 — quarantine, don't abort
             bad.append({"year": year, "reason": str(exc)})
-    if not frames:
+    if not pdfs:
         empty = spark.createDataFrame([], schema.aspep_raw_schema())
         return empty, bad
-    return normalize_fact(union_by_name(frames), census_dim), bad
+    # All years in one createDataFrame: its rows, in year order, spread
+    # over contiguous partitions, so a year-partitioned write makes one
+    # file per year plus at most one per partition boundary, not one per
+    # (year, partition).
+    fact = spark.createDataFrame(
+        pd.concat(pdfs, ignore_index=True), schema=schema.aspep_raw_schema()
+    )
+    return normalize_fact(fact, census_dim), bad
 
 
 def ingest_binary_workbooks(

@@ -13,6 +13,7 @@ from aspep_etl_spark.sources.census import (
 )
 
 from .test_ingest import census_dim, legacy_grid_2003, tidy_frame_2024
+from .xlsx_fixture import aspep_2024_xlsx_bytes, xlsx_bytes
 
 
 def test_csv_dim_source(spark, tmp_path):
@@ -69,3 +70,38 @@ def test_full_job_offline(spark, tmp_path):
         if r["state_code"] == "WI" and r["gov_function"] == "judicial and legal"
     ]
     assert wi and wi[0]["ft_pay"] == 7300000.0
+
+
+def test_job_quarantines_corrupt_workbook(spark, tmp_path):
+    """A downloaded workbook that fails to parse quarantines its year with
+    its file and reason; the other years still publish every artifact."""
+    import os
+
+    served = {
+        2003: xlsx_bytes(legacy_grid_2003()),
+        2023: b"PK\x03\x04 truncated, not a workbook",
+        2024: aspep_2024_xlsx_bytes(),
+    }
+
+    def fetch(url):
+        for year in served:
+            if f"/{year}" in url:
+                link = f"https://www2.census.gov/data/{year}/aspep_{year}.xlsx"
+                return f'<a href="{link}">State Government Employment &amp; Payroll Data</a>'
+        return None
+
+    def fetch_bytes(url):
+        return next(v for y, v in served.items() if f"aspep_{y}." in url)
+
+    result = run_aspep_job(
+        spark, JobPaths(str(tmp_path)), census_dim=census_dim(spark),
+        fetch=fetch, fetch_bytes=fetch_bytes,
+    )
+    assert [int(b["year"]) for b in result["bad_files"]] == [2023]
+    assert result["bad_files"][0]["file"].endswith("aspep_2023.xlsx")
+    assert result["bad_files"][0]["reason"]
+    assert set(result["artifacts"]) == {"combined_data", "derived_stats", "extended_stats"}
+    for path in result["artifacts"].values():
+        assert os.path.getsize(path) > 0
+    with open(result["artifacts"]["combined_data"]) as f:
+        assert {r["year"] for r in json.load(f)} == {2003, 2024}

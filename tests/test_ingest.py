@@ -128,3 +128,32 @@ def test_ingest_grids_end_to_end(spark):
 def test_ingest_empty_input(spark):
     fact, bad = ingest_grids(spark, {})
     assert fact.count() == 0 and bad == []
+
+
+def test_ingest_grids_one_frame(spark, tmp_path):
+    """All kept years reach Spark as one frame: a bad year is quarantined,
+    the others keep their own 0-based ``index``, the plan holds no Union,
+    and a year-partitioned store write makes about one file per year rather
+    than one per (year, core)."""
+    from aspep_etl_spark.sinks import write_canonical_store
+
+    fact, bad = ingest_grids(
+        spark,
+        {2003: legacy_grid_2003(), 2010: [["broken"]], 2024: tidy_frame_2024()},
+    )
+    assert [b["year"] for b in bad] == [2010]
+
+    by_year: dict = {}
+    for r in fact.select("year", "index").collect():
+        by_year.setdefault(r["year"], []).append(r["index"])
+    assert {y: sorted(ix) for y, ix in by_year.items()} == {
+        2003: list(range(5)),  # 4 data rows + the retained header row
+        2024: list(range(3)),
+    }
+
+    assert "Union" not in fact._jdf.queryExecution().optimizedPlan().toString()
+
+    store = tmp_path / "store"
+    write_canonical_store(fact, str(store))
+    files = list(store.rglob("*.parquet"))
+    assert len(files) <= spark.sparkContext.defaultParallelism + len(by_year) - 1

@@ -120,6 +120,8 @@ def test_json_array_byte_parity_with_reference_serializer(spark, tmp_path):
             "missing": None,  # null
             "flag": True,  # bool
             "precise": 1234.5678901234567,  # 10-dp rounding
+            "count": 3,  # int column holding a null → floats
+            "opt_flag": None,  # bool column holding a null
         },
         {
             "government_function": "Police Protection",
@@ -132,24 +134,39 @@ def test_json_array_byte_parity_with_reference_serializer(spark, tmp_path):
             "missing": "ok",
             "flag": False,
             "precise": 123456789.123456789,
+            "count": None,
+            "opt_flag": True,
         },
     ]
     expected = pd.DataFrame(records).to_json(orient="records", indent=4)
 
     df = spark.createDataFrame(
         pd.DataFrame(records).astype(object).where(pd.notnull(pd.DataFrame(records)))
-    )
+    ).withColumn("count", F.col("count").cast("bigint"))
+    assert dict(df.dtypes)["count"] == "bigint" and dict(df.dtypes)["opt_flag"] == "boolean"
     path = str(tmp_path / "parity.json")
     write_json_array(df, path)
     got = open(path).read()
     assert got == expected
 
     # empty-frame shape
-    from aspep_etl_spark.sinks.publish import render_records_json
+    empty = str(tmp_path / "empty.json")
+    write_json_array(spark.range(0), empty)
+    assert open(empty).read() == "[\n\n]" == pd.DataFrame([]).to_json(orient="records", indent=4)
 
-    assert render_records_json([]) == pd.DataFrame([]).to_json(
-        orient="records", indent=4
+    # dates and timestamps render as the str() of what a collected Row holds:
+    # Arrow hands back tz-aware datetimes, a Row naive local-time ones
+    dt = spark.sql(
+        "SELECT DATE'2024-01-02' AS d, TIMESTAMP'2024-03-04 05:06:07.123' AS ts, "
+        "CAST(NULL AS TIMESTAMP) AS ts_null"
     )
+    row = dt.collect()[0]
+    dt_path = str(tmp_path / "dates.json")
+    write_json_array(dt, dt_path)
+    assert json.load(open(dt_path)) == [
+        {"d": "2024-01-02", "ts": str(row["ts"]), "ts_null": None}
+    ]
+    assert "+" not in str(row["ts"])
 
 
 def test_compact_partitions_merges_small_files(spark, tmp_path):

@@ -41,7 +41,8 @@ def main() -> None:
         "ratio_c8_over_c32": ratio,
         "total_c32": c32["value"],
         "total_c8": c8["value"],
-        "total_ratio": round(c8["value"] / c32["value"], 2),
+        # null on a zero c32 total, as the per-query ratios omit zero slots
+        "total_ratio": round(c8["value"] / c32["value"], 2) if c32["value"] > 0 else None,
     }
     with open(out_path, "w") as f:
         json.dump(out, f, indent=1)
