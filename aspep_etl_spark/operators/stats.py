@@ -6,11 +6,10 @@ map-side partial aggregation (Catalyst's partial+final hash agg).  The
 reference runs two separate pandas groupbys (assets.py:366-367); fusing them
 halves the shuffle volume, which matters when the fact table is 100 TB.
 
-Median is exact (`F.median`, Spark ≥3.4) by default.  At extreme scale
-request ``"median_approx"`` instead — ``percentile_approx(c, 0.5,
-accuracy)`` is a mergeable sketch (partial+final, no per-group sort),
-and the golden-check budget is rel_tol=1e-3 (reference
-asset_checks.py:60), well within approx reach at the default accuracy.
+Median is exact (`F.median`, Spark ≥3.4).  The sketch median
+(``percentile_approx(c, 0.5, APPROX_MEDIAN_ACCURACY)``, a mergeable
+partial+final aggregate with no per-group sort) lives in the registry's
+``a1_grouped_median_approx`` and its rank audit below.
 """
 
 from __future__ import annotations
@@ -21,7 +20,7 @@ from pyspark.sql import functions as F
 from .setops import union_by_name
 
 #: percentile_approx accuracy (max rank error = 1/accuracy) for the
-#: "median_approx" stat; 10⁴ keeps grouped medians well inside the
+#: sketch median; 10⁴ keeps grouped medians well inside the
 #: reference's rel 1e-3 golden budget while staying sketch-sized.
 APPROX_MEDIAN_ACCURACY = 10_000
 
@@ -43,9 +42,6 @@ _STAT_FNS = {
     "median": F.median,
     "mean": F.avg,
     "mean_ordered": _mean_ordered,
-    "median_approx": lambda c: F.percentile_approx(
-        c, F.lit(0.5), F.lit(APPROX_MEDIAN_ACCURACY)
-    ),
 }
 
 
@@ -64,105 +60,6 @@ def grouped_stats_fused(
         for s in stats
     ]
     return df.groupBy(*group_keys).agg(*agg_exprs)
-
-
-def grouped_median_mean_preagg(
-    df: DataFrame,
-    group_keys: list[str],
-    stat_cols: list[str],
-) -> DataFrame:
-    """Exact grouped median+mean via (keys, value) PRE-AGGREGATION
-    (guide §2.3 "aggregate before you shuffle") — the A/B twin of the
-    ``grouped_stats_fused`` percentile path (r11 VERDICT ask #4).
-
-    Shape: one scan exploding each row into (col_id, value), a codegen
-    hash partial+final aggregate at (keys, col_id, value) grain, a
-    window cumsum per (keys, col_id) for weighted-rank selection, and a
-    pivot back to one row per key group.  Versus ``F.median``'s
-    ObjectHashAggregate this trades the Java-serialized per-task
-    OpenHashMap percentile buffers (and the final single-task per-group
-    sort of every distinct value) for codegen aggregation and a
-    distributed sort — at the cost of two extra Exchanges of
-    value-grain rows.
-
-    Selection reproduces ``F.median``'s ``Percentile.getPercentile``
-    double math exactly: position = 0.5·(n−1) (exact in binary64),
-    lower/higher its floor/ceil, result
-    (higher−position)·v[lower] + (position−lower)·v[higher] — so where
-    both indices land on one distinct value the result is that value
-    bit-for-bit, and the even-n midpoint is fl((vl+vh)/2) on both
-    formulations.  Mean is Σ(value·count)/n — a different (but still
-    partition-order-free per distinct value) summation than ``F.avg``'s;
-    callers rounding to ≤6 dp are unaffected (verified against the
-    DuckDB oracles at every SF).
-    """
-    from pyspark.sql import Window
-
-    structs = F.array(
-        *[
-            F.struct(F.lit(i).alias("cid"), F.col(c).alias("v"))
-            for i, c in enumerate(stat_cols)
-        ]
-    )
-    g = (
-        df.select(*group_keys, F.explode(structs).alias("s"))
-        .groupBy(*group_keys, F.col("s.cid").alias("cid"), F.col("s.v").alias("v"))
-        .agg(F.count("*").alias("cnt"))
-    )
-    part = [*group_keys, "cid"]
-    w_run = (
-        Window.partitionBy(*part)
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    w_all = Window.partitionBy(*part)
-    g = (
-        g.withColumn("cum", F.sum("cnt").over(w_run))
-        .withColumn("n", F.sum("cnt").over(w_all))
-        .withColumn("wsum", F.sum(F.col("v") * F.col("cnt")).over(w_all))
-    )
-    pos = F.lit(0.5) * (F.col("n") - 1).cast("double")
-    lo = F.floor(pos)
-    hi = F.ceil(pos)
-    prev = F.col("cum") - F.col("cnt")
-    sel = (
-        g.withColumn("vl", F.when((prev <= lo) & (lo < F.col("cum")), F.col("v")))
-        .withColumn("vh", F.when((prev <= hi) & (hi < F.col("cum")), F.col("v")))
-        .filter(F.col("vl").isNotNull() | F.col("vh").isNotNull())
-        .groupBy(*part)
-        .agg(
-            F.max("vl").alias("vl"),
-            F.max("vh").alias("vh"),
-            F.first("n").alias("n"),
-            F.first("wsum").alias("wsum"),
-        )
-    )
-    posf = F.lit(0.5) * (F.col("n") - 1).cast("double")
-    lof = F.floor(posf).cast("double")
-    hif = F.ceil(posf).cast("double")
-    median = F.when(
-        lof == hif, F.col("vl")
-    ).otherwise((hif - posf) * F.col("vl") + (posf - lof) * F.col("vh"))
-    mean = F.col("wsum") / F.col("n").cast("double")
-    per_col = sel.select(
-        *group_keys,
-        "cid",
-        median.alias("__med"),
-        mean.alias("__mean"),
-    )
-    aggs = []
-    for i, c in enumerate(stat_cols):
-        aggs.append(
-            F.max(F.when(F.col("cid") == i, F.col("__med"))).alias(
-                f"__median__{c}"
-            )
-        )
-        aggs.append(
-            F.max(F.when(F.col("cid") == i, F.col("__mean"))).alias(
-                f"__mean__{c}"
-            )
-        )
-    return per_col.groupBy(*group_keys).agg(*aggs)
 
 
 def grouped_stats(

@@ -77,49 +77,46 @@ def yoy_deltas_wide(
     cohort_keys: list[str],
     order_keys: list[str],
     metric_cols: list[str],
-    lags: tuple[int, ...] = (1, 4),
-    lag_labels: dict[int, str] | None = None,
-    reference_exact: bool = False,
     chunk_rows: int | None = None,
 ) -> DataFrame:
-    """Wide-fan-out twin of ``yoy_deltas`` as an Arrow-batched kernel.
+    """Positional 1yr/5yr deltas with LEGACY pandas ``pct_change``
+    semantics (reference assets.py:443-444), as an Arrow-batched kernel.
 
-    Same single shuffle on the cohort keys, but above a few dozen derived
-    columns Catalyst plan/codegen time dominates the stacked-window
-    expression form — the kernel keeps the plan O(1) in column count.
+    ``{col}_{label}_pct``: the series is forward-filled BEFORE the ratio
+    (default ``fill_method="pad"`` — both numerator and shifted
+    denominator are padded across NaN gaps) and a zero base yields ±inf
+    (0→0 yields NaN), which then participates in the reference's pos/neg
+    delta ranks (±inf takes rank 1 on its side).  ``{col}_{label}_abs`` is
+    plain ``diff``, never padded — the same value ``yoy_deltas`` computes,
+    whose ``_pct`` instead keeps the engine's own zero base → null
+    contract.  JSON publish maps inf→null at the boundary
+    (sinks/publish.py), matching the reference's artifact after its own
+    inf-replace.
+
+    Same single shuffle on the cohort keys as the window form, but the
+    kernel keeps the plan O(1) in column count where stacked window
+    expressions make Catalyst plan/codegen time dominate.
 
     Partition-level vectorization with BOUNDED memory: rows are
     hash-partitioned by cohort and sorted (cohort, order) within
     partitions; the kernel accumulates Arrow batches only up to
     ``chunk_rows`` (default ``WIDE_CHUNK_ROWS``) and flushes each chunk
     through pandas ``groupby().shift()`` — vectorized across all cohorts
-    in the chunk at once.  A ``max(lags)``-row keyed carry (raw values for
-    the shift, forward-filled values for the legacy ``pct_change`` mode)
-    is prepended to the next chunk, so a cohort that straddles a chunk —
-    or a single cohort larger than executor memory — streams instead of
-    OOMing.  Chunk boundaries are invisible to the semantics: the carry
-    rows reproduce exactly the lag window and ffill state the split
-    removed.  (A per-group ``applyInPandas`` costs ~10 ms of pandas
-    overhead per cohort — ruinous with thousands of small cohorts.)
-    Semantics identical to ``yoy_deltas`` (pinned by the parity suite and
-    a chunked-vs-unchunked equality test).
-
-    ``reference_exact=True`` reproduces legacy-pandas ``pct_change``
-    instead (reference assets.py:443-444): the series is forward-filled
-    BEFORE the ratio (default ``fill_method="pad"`` — both numerator and
-    shifted denominator are padded across NaN gaps) and a zero base yields
-    ±inf (0→0 yields NaN), which then participates in the reference's
-    pos/neg delta ranks (±inf takes rank 1 on its side).  ``_abs`` columns
-    are plain ``diff`` — never padded — in both modes.  JSON publish maps
-    inf→null at the boundary (sinks/publish.py), matching the reference's
-    artifact after its own inf-replace.
+    in the chunk at once.  A 4-row keyed carry (raw values for the
+    shift, forward-filled values for the ratio) is prepended to the next
+    chunk, so a cohort that straddles a chunk — or a single cohort larger
+    than executor memory — streams instead of OOMing.  Chunk boundaries
+    are invisible to the semantics: the carry rows reproduce exactly the
+    lag window and ffill state the split removed.  (A per-group
+    ``applyInPandas`` costs ~10 ms of pandas overhead per cohort —
+    ruinous with thousands of small cohorts.)
     """
     import numpy as np
     import pandas as pd
 
-    lag_labels = lag_labels or {1: "1yr", 4: "5yr"}
+    lags = {1: "1yr", 4: "5yr"}  # positional lag → column label
     new_cols = [
-        f"{c}_{lag_labels[k]}_{kind}" for c in metric_cols for k in lags for kind in ("pct", "abs")
+        f"{c}_{lbl}_{kind}" for c in metric_cols for lbl in lags.values() for kind in ("pct", "abs")
     ]
     out_schema = _schema_plus_doubles(df, new_cols)
     out_names = [f.name for f in out_schema.fields]
@@ -132,9 +129,10 @@ def yoy_deltas_wide(
         chunk; return (out_frame, new_tail_raw, new_tail_fill)."""
         pdf = pdf.reset_index(drop=True)
         ctx = 0 if tail_raw is None else len(tail_raw)
-        kr = pdf[keys + metric_cols]
+        kr = kf = pdf[keys + metric_cols]
         if ctx:
             kr = pd.concat([tail_raw, kr], ignore_index=True)
+            kf = pd.concat([tail_fill, kf], ignore_index=True)
         g = kr.groupby(keys, sort=False, dropna=False)
         # one groupby pass per lag across ALL metric columns (a per-column
         # Series.groupby costs ~37x the group-dispatch overhead)
@@ -143,42 +141,22 @@ def yoy_deltas_wide(
             k: g[metric_cols].shift(k).astype(float).iloc[ctx:].reset_index(drop=True)
             for k in lags
         }
-        filled_full = fshift = None
-        if reference_exact:
-            kf = pdf[keys + metric_cols]
-            if ctx:
-                kf = pd.concat([tail_fill, kf], ignore_index=True)
-            gf = kf.groupby(keys, sort=False, dropna=False)
-            filled_full = gf[metric_cols].ffill().astype(float)
-            fg = filled_full.groupby(
-                [kf[k] for k in keys], sort=False, dropna=False
-            )
-            fshift = {
-                k: fg.shift(k).iloc[ctx:].reset_index(drop=True) for k in lags
-            }
-            filled = filled_full.iloc[ctx:].reset_index(drop=True)
+        filled_full = kf.groupby(keys, sort=False, dropna=False)[metric_cols].ffill().astype(float)
+        fg = filled_full.groupby([kf[k] for k in keys], sort=False, dropna=False)
+        fshift = {k: fg.shift(k).iloc[ctx:].reset_index(drop=True) for k in lags}
+        filled = filled_full.iloc[ctx:].reset_index(drop=True)
         add = {}
         for c in metric_cols:
-            for k in lags:
-                lbl = lag_labels[k]
-                prev = shifted[k][c]
+            for k, lbl in lags.items():
                 with np.errstate(divide="ignore", invalid="ignore"):
-                    if reference_exact:
-                        # legacy pct_change: padded num AND denom, ±inf kept
-                        pct = filled[c] / fshift[k][c] - 1
-                    else:
-                        pct = base_all[c] / prev - 1
-                        pct[(prev == 0) | np.isinf(pct)] = np.nan  # zero base → null
-                add[f"{c}_{lbl}_pct"] = pct
-                add[f"{c}_{lbl}_abs"] = base_all[c] - prev
+                    # padded num AND denom, ±inf kept
+                    add[f"{c}_{lbl}_pct"] = filled[c] / fshift[k][c] - 1
+                add[f"{c}_{lbl}_abs"] = base_all[c] - shifted[k][c]
         out = pd.concat([pdf, pd.DataFrame(add)], axis=1)[out_names]
         new_tail_raw = kr.iloc[-max_lag:].reset_index(drop=True)
-        if reference_exact:
-            new_tail_fill = kr.iloc[-max_lag:][keys].reset_index(drop=True).join(
-                filled_full.iloc[-max_lag:].reset_index(drop=True)
-            )
-        else:
-            new_tail_fill = None
+        new_tail_fill = new_tail_raw[keys].join(
+            filled_full.iloc[-max_lag:].reset_index(drop=True)
+        )
         return out, new_tail_raw, new_tail_fill
 
     def kernel(batches):

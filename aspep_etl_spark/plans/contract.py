@@ -402,7 +402,7 @@ FROM lineitem GROUP BY l_returnflag, l_linestatus
 
 
 def a1_grouped_median_approx(spark, sf_dir):
-    """A1 with the sketch-based median ("median_approx"): mergeable
+    """A1 with the sketch-based median: mergeable
     percentile_approx partials instead of exact median's per-group sort —
     the 100 TB path (reference asset_checks.py:60 rel-1e-3 budget).
 
@@ -1412,7 +1412,7 @@ FROM base WHERE doc_id NOT IN (SELECT DISTINCT id_b FROM near)
 """
 
 
-def aspep_extended_pipeline(spark, sf_dir, median_of="exact"):
+def aspep_extended_pipeline(spark, sf_dir):
     """The reference's core analytic chain end-to-end at benchmark scale:
     an ASPEP-shaped fact derived from lineitem (supplier→state analog,
     returnflag×linestatus→function, ship-year→year), then the full
@@ -1428,12 +1428,7 @@ def aspep_extended_pipeline(spark, sf_dir, median_of="exact"):
     inputs on both engines — the full 130-column chain hash-matches with NO
     rounding macros (plans/pipeline_oracle.py).  Plan shape is unchanged:
     the per-row multiply+round+cast stays inside whole-stage codegen and
-    the sums remain partial+final hash aggregates.
-
-    ``median_of="approx"`` runs the whole chain with the mergeable
-    percentile_approx median (the 100 TB path — see derive_stats); the
-    approx US-median rows stay within the reference's rel-1e-3 golden
-    budget of the exact ones (pinned in tests/test_pipeline_parity.py)."""
+    the sums remain partial+final hash aggregates."""
     from .pipeline import derive_extended_stats, derive_stats
 
     li = _t(spark, sf_dir, "lineitem")
@@ -1479,7 +1474,7 @@ def aspep_extended_pipeline(spark, sf_dir, median_of="exact"):
     # ``cache.free_cached_blocks``.
     if 3 * li.rdd.getNumPartitions() > 2 * spark.sparkContext.defaultParallelism:
         fact = fact.persist()
-    stats = derive_stats(fact, median_of=median_of)
+    stats = derive_stats(fact)
     return derive_extended_stats(stats)
 
 def dedup_minhash_lsh_q(spark, sf_dir):

@@ -12,8 +12,8 @@ stage here is shuffle-bounded:
 
 - ``normalize_fact``      : 0 shuffles (map-only + broadcast joins)
 - ``derive_stats``        : 1 shuffle  (fused median+mean aggregation)
-- ``derive_extended_stats``: 2 shuffles (delta window on cohort keys, rank
-                             windows on year/fn keys — all ~300 derived
+- ``derive_extended_stats``: 2 shuffles (delta kernel on cohort keys, rank
+                             kernel on year/fn keys — all ~300 derived
                              columns ride those two exchanges)
 """
 
@@ -32,7 +32,7 @@ from ..functions.scalar import (
 from ..operators.filters import filter_significant, filter_year_range
 from ..operators.recode import broadcast_dim_join, recode_values
 from ..operators.stats import append_cohort_stats
-from ..operators.windows import cohort_ranks, signed_delta_ranks, yoy_deltas
+from ..operators.windows import ranks_wide, yoy_deltas_wide
 
 
 def normalize_fact(raw: DataFrame, census_dim: DataFrame | None = None) -> DataFrame:
@@ -62,28 +62,20 @@ def normalize_fact(raw: DataFrame, census_dim: DataFrame | None = None) -> DataF
     return filter_year_range(df, maps.START_YEAR, maps.END_YEAR)
 
 
-def derive_stats(fact: DataFrame, median_of: str = "exact") -> DataFrame:
+def derive_stats(fact: DataFrame) -> DataFrame:
     """Ratio metrics + nationwide median/mean cohort rows
     (reference assets.py:336-385).
 
     - Safe ratios: zero or null divisor → null (F7).
     - Stats cohorts group by (year, gov_function) over non-US rows only,
       then union back labeled `US-median` / `US-mean`, scope `stats`.
+    - The median is exact (`F.median`).
     - The mean is the value-sorted ordered fold (``mean_ordered``): the
       stats stage aggregates the already-aggregated fact (≤ #states rows
       per cohort at any raw scale), and the fold makes the published
       stats bitwise reproducible across runs/partitionings — also what
       lets the full-chain DuckDB oracle hash-match (pipeline_oracle.py).
-    - ``median_of``: ``"exact"`` (default — `F.median`, the verification
-      baseline) or ``"approx"`` (mergeable ``percentile_approx`` sketch,
-      the 100 TB path: partial+final agg, no per-group sort buffer).  The
-      approx median stays inside the reference's golden rel-1e-3 budget
-      (asset_checks.py:60; pinned by tests/test_pipeline_parity.py) and
-      the cohort label remains `US-median` either way.
     """
-    if median_of not in ("exact", "approx"):
-        raise ValueError(f"median_of must be 'exact' or 'approx', got {median_of!r}")
-    median_stat = "median" if median_of == "exact" else "median_approx"
     df = fact.withColumns(
         {
             "pay_per_fte": safe_ratio(F.col("total_pay"), F.col("ft_eq_employment")),
@@ -97,26 +89,21 @@ def derive_stats(fact: DataFrame, median_of: str = "exact") -> DataFrame:
         group_keys=["year", "gov_function"],
         stat_cols=stat_cols,
         exclude_filter=F.col("state_code") != "US",
-        stat_labels={median_stat: "US-median", "mean_ordered": "US-mean"},
+        stat_labels={"median": "US-median", "mean_ordered": "US-mean"},
     )
 
 
-def derive_extended_stats(
-    stats_df: DataFrame,
-    persist_between_stages: bool = True,
-    wide_kernel_threshold: int = 24,
-    reference_exact: bool = True,
-) -> DataFrame:
+def derive_extended_stats(stats_df: DataFrame) -> DataFrame:
     """YoY deltas + cohort and directional ranks + significance filter
     (reference assets.py:387-491).
 
-    Plan shape: the delta stage shuffles on (state_code, gov_function); the
-    rank stage shuffles on (year, gov_function) — two shuffles regardless of
-    column count.  With ~9 base metrics this fans out to ~150 derived
-    columns; above ``wide_kernel_threshold`` derived columns per family the
-    stage switches from stacked JVM window expressions to the Arrow-batched
-    ``applyInPandas`` kernels (Catalyst plan/codegen time grows with every
-    stacked window; the kernel plan is O(1) in column count — see PERF.md).
+    Both stages are Arrow-batched ``mapInPandas`` kernels: only pandas
+    expresses the reference's legacy ``pct_change`` (ffill-padded ratio,
+    ±inf on a zero base feeding the pos/neg ranks — see
+    operators/windows.py), and the kernel plan stays O(1) in column count
+    where ~150 stacked window expressions would not (PERF.md).  The delta
+    stage shuffles on (state_code, gov_function), the rank stage on
+    (year, gov_function) — two shuffles regardless of column count.
     """
     base_cols = [c for c in schema.BASE_METRIC_COLS if c in stats_df.columns]
     extra_numeric = [
@@ -125,42 +112,14 @@ def derive_extended_stats(
         if c not in base_cols
     ]
     metric_cols = base_cols + extra_numeric
-    use_wide = len(metric_cols) * 4 > wide_kernel_threshold
-
-    # reference_exact pins legacy-pandas pct_change semantics (ffill-padded
-    # ratio, ±inf on zero base feeding the pos/neg ranks — see
-    # operators/windows.py) — only the pandas kernels express those, so it
-    # forces the wide path; the JVM expression path keeps the engine's own
-    # contract (zero base → null), which the W1 oracle query pins.
-    use_wide = use_wide or reference_exact
-    cohort_keys = ["state_code", "gov_function"]
-    if use_wide:
-        from ..operators.windows import yoy_deltas_wide
-
-        df = yoy_deltas_wide(
-            stats_df, cohort_keys, ["year"], metric_cols,
-            reference_exact=reference_exact,
-        )
-    else:
-        df = yoy_deltas(stats_df, cohort_keys, ["year"], metric_cols)
-        if persist_between_stages:
-            df = df.localCheckpoint(eager=False)
+    df = yoy_deltas_wide(stats_df, ["state_code", "gov_function"], ["year"], metric_cols)
 
     delta_cols = [
         c for c in df.columns if c.endswith(schema.DELTA_SUFFIXES)
     ]
-    rank_keys = ["year", "gov_function"]
     # Cohorts intentionally include US / US-median / US-mean rows — the
     # reference ranks before any filtering (assets.py:457-474).
-    if use_wide:
-        from ..operators.windows import ranks_wide
-
-        df = ranks_wide(df, rank_keys, metric_cols, delta_cols)
-    else:
-        df = cohort_ranks(df, rank_keys, metric_cols)
-        if persist_between_stages:
-            df = df.localCheckpoint(eager=False)
-        df = signed_delta_ranks(df, rank_keys, delta_cols)
+    df = ranks_wide(df, ["year", "gov_function"], metric_cols, delta_cols)
 
     # Parity note: the reference's significance filter scans *every* numeric
     # column — including `year` and `index` (pandas select_dtypes,

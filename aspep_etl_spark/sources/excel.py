@@ -10,8 +10,8 @@ Two raw layouts exist:
 The adapters are written grid-first: ``(grid, year) → canonical pandas
 frame`` where a grid is ``list[list]`` of raw cell values.  That keeps the
 header-collapse/slugify/rename logic independent of any Excel parser —
-driver-side ``pd.read_excel`` feeds it when openpyxl/xlrd exist (they are
-optional), and the same function runs inside ``mapInPandas`` over a
+the stdlib readers ``xlsx_lite`` (OOXML) and ``xls_lite`` (BIFF8) feed it
+on the driver, and the same function runs inside ``mapInPandas`` over a
 ``binaryFile`` scan for many-file scale (``ingest_binary_workbooks``).
 
 Reference behavior reproduced: process_aspep/assets.py:115-165 (both
@@ -20,7 +20,6 @@ adapters), 270-333 (per-year loop with quarantine).
 
 from __future__ import annotations
 
-import io
 import os
 import re
 
@@ -30,6 +29,8 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .. import maps, schema
 from ..functions.scalar import slugify_py
+from .xls_lite import read_xls_grid
+from .xlsx_lite import read_xlsx_grid
 
 _PAREN_RE = re.compile(r"\(.*?\)")
 _DASH_RE = re.compile("[−–—]")
@@ -156,24 +157,12 @@ def grids_from_raw_dir(raw_dir: str) -> tuple[dict[int, pd.DataFrame], list[dict
 
 
 def _read_grid(raw: bytes, filename: str, year: int) -> list[list]:
-    """Excel bytes → positional grid.  Prefers pandas engines (openpyxl /
-    xlrd) when installed; falls back to the stdlib OOXML reader for .xlsx
-    (``xlsx_lite``).  BIFF .xls needs xlrd (optional extra)."""
-    engine = "openpyxl" if filename.lower().endswith(".xlsx") else "xlrd"
+    """Excel bytes → positional grid, by file extension: ``.xlsx`` through
+    the stdlib OOXML reader, anything else through the BIFF8 reader."""
     sheet = maps.SHEET_NAMES.get(year)
-    try:
-        kwargs: dict = {"engine": engine, "header": None}
-        if sheet:
-            kwargs["sheet_name"] = sheet
-        return pd.read_excel(io.BytesIO(raw), **kwargs).values.tolist()
-    except ImportError:
-        if engine == "openpyxl":
-            from .xlsx_lite import read_xlsx_grid
-
-            return read_xlsx_grid(raw, sheet_name=sheet)
-        from .xls_lite import read_xls_grid
-
-        return read_xls_grid(raw, sheet_name=sheet)
+    if filename.lower().endswith(".xlsx"):
+        return read_xlsx_grid(raw, sheet_name=sheet)
+    return read_xls_grid(raw, sheet_name=sheet)
 
 
 def parse_workbook_bytes(raw: bytes, filename: str, year: int) -> pd.DataFrame:

@@ -5,9 +5,10 @@ Uses the engine's canonical column names (``state_code`` instead of the
 reference's ``state code``).  pct deltas follow LEGACY pandas
 ``pct_change`` exactly (default ``fill_method="pad"``): the series is
 forward-filled before the ratio and a zero base yields ±inf, which then
-participates in the pos/neg delta ranks — the engine's
-``reference_exact`` pipeline path reproduces all of it, and the
-comparison layer matches inf AGAINST inf (no null-coercion escape hatch).
+participates in the pos/neg delta ranks — the engine's delta kernel
+(``operators.windows.yoy_deltas_wide``, the only path of
+``derive_extended_stats``) reproduces all of it, and the comparison layer
+matches inf AGAINST inf (no null-coercion escape hatch).
 """
 
 from __future__ import annotations
@@ -20,6 +21,15 @@ EXCLUDE = ["index", "state", "gov_function", "state_code", "region", "division",
 
 def _stat_cols(df: pd.DataFrame) -> list[str]:
     return [c for c in df.columns if c not in EXCLUDE and pd.api.types.is_numeric_dtype(df[c])]
+
+
+def legacy_pct_change(s: pd.Series, periods: int) -> pd.Series:
+    """Legacy pandas ``s.pct_change(periods)`` (reference
+    assets.py:443-444): ffill-padded numerator AND denominator, ±inf on a
+    zero base kept; ``diff`` never pads."""
+    filled = s.ffill()
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return filled / filled.shift(periods) - 1
 
 
 def derive_stats_oracle(combined: pd.DataFrame) -> pd.DataFrame:
@@ -47,13 +57,8 @@ def derive_extended_stats_oracle(stats: pd.DataFrame) -> pd.DataFrame:
     for _, grp in data.groupby(["state_code", "gov_function"]):
         grp = grp.sort_values("year").copy()
         for c in cols:
-            # legacy pct_change: ffill-padded numerator AND denominator,
-            # ±inf on zero base kept (reference assets.py:443-444); diff
-            # never pads.
-            filled = grp[c].ffill()
-            with np.errstate(divide="ignore", invalid="ignore"):
-                grp[f"{c}_1yr_pct"] = filled / filled.shift(1) - 1
-                grp[f"{c}_5yr_pct"] = filled / filled.shift(4) - 1
+            grp[f"{c}_1yr_pct"] = legacy_pct_change(grp[c], 1)
+            grp[f"{c}_5yr_pct"] = legacy_pct_change(grp[c], 4)
             grp[f"{c}_1yr_abs"] = grp[c].diff(1)
             grp[f"{c}_5yr_abs"] = grp[c].diff(4)
         frames.append(grp)

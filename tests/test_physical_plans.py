@@ -91,6 +91,21 @@ def test_w1_deltas_one_window_pass(spark, sf):
     assert plan.count("Exchange") == 1
 
 
+def test_extended_stats_runs_only_the_kernels(spark):
+    """derive_extended_stats has one code path: the delta and rank
+    mapInPandas kernels.  The executed (AQE final) plan on the ASPEP
+    fixture holds exactly those two and no stacked JVM Window."""
+    from aspep_etl_spark.plans import derive_extended_stats, derive_stats
+
+    from .aspep_fixture import make_combined_fact
+
+    ext = derive_extended_stats(derive_stats(spark.createDataFrame(make_combined_fact())))
+    ext.collect()
+    plan = ext._jdf.queryExecution().executedPlan().finalPhysicalPlan().toString()
+    assert plan.count("MapInPandas") == 2, plan
+    assert "Window" not in plan, plan
+
+
 def test_embedding_neardup_no_cartesian_product(spark, sf):
     """The contract's embedding near-dup runs the bucketed path: candidate
     generation joins on `bucket` — the only nested-loop allowed is the

@@ -99,75 +99,3 @@ def test_derive_extended_stats_parity(spark, stats_pair):
     ]
     _compare(pdf, oracle, derived)
 
-
-def test_median_of_approx_within_golden_budget(spark):
-    """r4 verdict ask #8, part 1: at realistic cohort sizes the
-    median_of="approx" sketch stays within the reference's golden
-    rel-1e-3 budget (asset_checks.py:60) of the exact median.  (The
-    8-state fixture's micro-groups can't carry this claim — with n≈8 a
-    ±1 rank error is a few percent by construction; the bracket test
-    below pins those.)"""
-    rng = np.random.default_rng(11)
-    rows = []
-    for g in range(3):
-        vals = rng.lognormal(7.5, 0.6, size=4000)
-        rows.extend((f"g{g}", float(v)) for v in vals)
-    sdf = spark.createDataFrame(pd.DataFrame(rows, columns=["grp", "v"]))
-    from aspep_etl_spark.operators.stats import grouped_stats_fused
-
-    fused = grouped_stats_fused(
-        sdf, ["grp"], ["v"], stats=("median", "median_approx")
-    ).toPandas()
-    rel = np.abs(fused["__median_approx__v"] - fused["__median__v"]) / fused[
-        "__median__v"
-    ]
-    assert (rel <= 1e-3).all(), rel.tolist()
-
-
-def test_median_of_approx_bracket_and_untouched_rows(spark, fixture_pdf):
-    """r4 verdict ask #8, part 2: on the fixture's micro-cohorts the
-    approx median must land between the two middle order statistics of
-    its group (accuracy ≫ n ⇒ rank error < 1), and all non-US-median
-    rows are byte-identical between the two modes."""
-    sdf = spark.createDataFrame(fixture_pdf)
-    exact = derive_stats(sdf, median_of="exact").toPandas()
-    approx = derive_stats(sdf, median_of="approx").toPandas()
-    med_a = _norm(approx[approx.state_code == "US-median"])
-    assert len(med_a) > 0
-
-    base = fixture_pdf[fixture_pdf.state_code != "US"]
-    for c in ["ft_employment", "ft_pay", "pt_pay", "pt_hour"]:
-        if c not in base.columns or c not in med_a.columns:
-            continue
-        def _bracket(s):
-            v = s.dropna().sort_values()
-            if not len(v):
-                return (np.nan, np.nan)
-            return (v.iloc[(len(v) - 1) // 2], v.iloc[len(v) // 2])
-
-        brackets = (
-            base.groupby(["year", "gov_function"])[c].apply(_bracket).to_dict()
-        )
-        for _, row in med_a.iterrows():
-            lo, hi = brackets.get(
-                (row["year"], row["gov_function"]), (np.nan, np.nan)
-            )
-            v = row[c]
-            if np.isnan(v) or np.isnan(lo):
-                continue
-            assert lo - 1e-9 <= v <= hi + 1e-9, (c, row["year"], row["gov_function"], v, lo, hi)
-
-    rest_e = _norm(exact[exact.state_code != "US-median"])
-    rest_a = _norm(approx[approx.state_code != "US-median"])
-    pd.testing.assert_frame_equal(rest_e, rest_a)
-
-
-def test_extended_pipeline_median_of_flag(spark, sf_dir):
-    """The end-to-end contract chain accepts median_of="approx" and
-    produces the same schema and row count as the exact form."""
-    from aspep_etl_spark.plans.contract import aspep_extended_pipeline
-
-    exact = aspep_extended_pipeline(spark, sf_dir)
-    approx = aspep_extended_pipeline(spark, sf_dir, median_of="approx")
-    assert exact.schema == approx.schema
-    assert exact.count() == approx.count()

@@ -201,20 +201,25 @@ def test_quality_checks_and_profile_on_empty_table(spark):
 
 
 def test_grouped_median_approx_error_bound(spark, sf_dir):
-    """"median_approx" (mergeable percentile_approx sketch — the 100 TB
-    path: no per-group sort) must stay within the reference golden budget
-    (rel 1e-3, reference asset_checks.py:60) of the exact grouped median."""
-    from aspep_etl_spark.operators.stats import grouped_stats
+    """The sketch median (mergeable ``percentile_approx`` at
+    ``APPROX_MEDIAN_ACCURACY`` — the 100 TB path: no per-group sort) must
+    stay within the reference golden budget (rel 1e-3, reference
+    asset_checks.py:60) of the exact grouped median."""
+    from pyspark.sql import functions as F
+
+    from aspep_etl_spark.operators.stats import APPROX_MEDIAN_ACCURACY
     from aspep_etl_spark.sources.registry import load_table
 
     li = load_table(spark, sf_dir, "lineitem")
     keys = ["l_returnflag", "l_linestatus"]
     cols = ["l_quantity", "l_extendedprice"]
-    per = grouped_stats(li, keys, cols, stats=("median", "median_approx"))
-    exact = {tuple(r[k] for k in keys): r for r in per["median"].collect()}
-    approx = {tuple(r[k] for k in keys): r for r in per["median_approx"].collect()}
-    assert set(exact) == set(approx) and exact
-    for g, er in exact.items():
-        ar = approx[g]
+    acc = F.lit(APPROX_MEDIAN_ACCURACY)
+    rows = li.groupBy(*keys).agg(
+        *[F.median(c).alias(f"exact_{c}") for c in cols],
+        *[F.percentile_approx(c, F.lit(0.5), acc).alias(f"approx_{c}") for c in cols],
+    ).collect()
+    assert rows
+    for r in rows:
         for c in cols:
-            assert abs(ar[c] - er[c]) <= abs(er[c]) * 1e-3 + 1e-9, (g, c)
+            er, ar = r[f"exact_{c}"], r[f"approx_{c}"]
+            assert abs(ar - er) <= abs(er) * 1e-3 + 1e-9, ([r[k] for k in keys], c)

@@ -5,12 +5,15 @@ streamed in tiny chunks (skew safety — VERDICT r3 item 1).
 The chunked kernels bound memory at ~chunk_rows regardless of partition
 size; these tests force pathological chunking (chunk_rows far below the
 cohort size, plus a deliberately skewed single-cohort frame) and pin exact
-equality against the unchunked JVM-expression twins.
+equality against independent references: the unchunked JVM-expression
+twins, and for the legacy ``pct_change`` deltas the pandas oracle's pad
+formula.
 """
 
 import math
 import random
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -21,6 +24,8 @@ from aspep_etl_spark.operators.windows import (
     yoy_deltas,
     yoy_deltas_wide,
 )
+
+from .pandas_oracle import legacy_pct_change
 
 
 def _mk_frame(spark, n_cohorts, rows_per_cohort, seed=7):
@@ -70,34 +75,53 @@ def _assert_frames_equal(a, b):
 
 KEYS = ["state_code", "gov_function"]
 METRICS = ["m1", "m2"]
+LAGS = {1: "1yr", 4: "5yr"}
+
+
+def _assert_yoy_matches_references(df, got):
+    """``_abs`` columns equal the JVM window twin (plain ``diff``);
+    ``_pct`` columns equal the oracle's legacy pad formula, per cohort in
+    year order — ±inf against ±inf, NaN/null against NaN/null."""
+    order = KEYS + ["year"]
+    abs_cols = [f"{c}_{lbl}_abs" for c in METRICS for lbl in LAGS.values()]
+    _assert_frames_equal(
+        yoy_deltas(df, KEYS, ["year"], METRICS).select(*order, *abs_cols),
+        got.select(*order, *abs_cols),
+    )
+    pct_cols = [f"{c}_{lbl}_pct" for c in METRICS for lbl in LAGS.values()]
+    exp = df.toPandas().sort_values(order).reset_index(drop=True)
+    for c in METRICS:
+        for k, lbl in LAGS.items():
+            exp[f"{c}_{lbl}_pct"] = exp.groupby(KEYS)[c].transform(
+                lambda s, k=k: legacy_pct_change(s, k)
+            )
+    act = got.select(*order, *pct_cols).toPandas().sort_values(order).reset_index(drop=True)
+    assert act[order].equals(exp[order])
+    np.testing.assert_allclose(
+        act[pct_cols].to_numpy(float), exp[pct_cols].to_numpy(float), rtol=1e-12, atol=1e-12
+    )
 
 
 def test_yoy_chunked_matches_window_expressions(spark):
     df = _mk_frame(spark, n_cohorts=9, rows_per_cohort=25)
-    expected = yoy_deltas(df, KEYS, ["year"], METRICS)
     got = yoy_deltas_wide(df, KEYS, ["year"], METRICS, chunk_rows=7)
-    _assert_frames_equal(expected, got)
+    _assert_yoy_matches_references(df, got)
 
 
 def test_yoy_chunked_skewed_single_cohort(spark):
     # one giant cohort — every chunk boundary falls mid-cohort, so the
     # lag/ffill carry is exercised on every flush
     df = _mk_frame(spark, n_cohorts=1, rows_per_cohort=400)
-    expected = yoy_deltas(df, KEYS, ["year"], METRICS)
     got = yoy_deltas_wide(df, KEYS, ["year"], METRICS, chunk_rows=16)
-    _assert_frames_equal(expected, got)
+    _assert_yoy_matches_references(df, got)
 
 
 def test_yoy_reference_exact_chunk_invariant(spark):
     # legacy pct_change mode (ffill + ±inf) must be chunk-size invariant:
     # tiny chunks vs one big chunk give byte-identical results
     df = _mk_frame(spark, n_cohorts=4, rows_per_cohort=60, seed=11)
-    whole = yoy_deltas_wide(
-        df, KEYS, ["year"], METRICS, reference_exact=True, chunk_rows=1_000_000
-    )
-    tiny = yoy_deltas_wide(
-        df, KEYS, ["year"], METRICS, reference_exact=True, chunk_rows=5
-    )
+    whole = yoy_deltas_wide(df, KEYS, ["year"], METRICS, chunk_rows=1_000_000)
+    tiny = yoy_deltas_wide(df, KEYS, ["year"], METRICS, chunk_rows=5)
     _assert_frames_equal(whole, tiny)
 
 

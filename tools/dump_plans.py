@@ -1,7 +1,23 @@
 #!/usr/bin/env python
-"""Regenerate PLANS.md: formatted physical plans for the headline queries,
-so plan shapes (pushdown, broadcast, exchanges, codegen) are reviewable
-without running Spark."""
+"""Dump formatted physical plans, so plan shapes (pushdown, broadcast,
+exchanges, codegen) are reviewable without running Spark.
+
+Usage:
+    python tools/dump_plans.py
+    python tools/dump_plans.py [--vanilla] OUT_DIR SUFFIX [query ...]
+
+With no arguments, regenerates PLANS.md from the ``QUERIES`` list at
+``$SPARK_GRAFT_SF_DIR`` (default sf0.01).
+
+With OUT_DIR and SUFFIX, writes ``OUT_DIR/<query>_<SUFFIX>.txt`` for each
+named query (default: ``bench.py``'s headline set) at ``bench.py``'s
+``SF_DIR`` (``$SPARK_GRAFT_SF_DIR``, default sf0.1).  Run it once from
+the parent checkout with SUFFIX=before and once from the change with
+SUFFIX=after to diff plan shapes.  By default the plans come from ``get_spark``'s tuned
+session (64 MB broadcast threshold, AQE advisory sizes), which both arms
+share; ``--vanilla`` uses a bare ``SparkSession.builder.getOrCreate()``
+instead, for the plan shapes a default session picks.
+"""
 
 from __future__ import annotations
 
@@ -10,7 +26,8 @@ import io
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 QUERIES = [
@@ -108,11 +125,17 @@ QUERIES = [
 ]
 
 
-def main() -> None:
-    from aspep_etl_spark.plans.contract import SPARK_QUERIES
-    from aspep_etl_spark.session import get_spark
+USAGE = "usage: python tools/dump_plans.py [[--vanilla] OUT_DIR SUFFIX [query ...]]"
 
-    spark = get_spark(app_name="dump-plans")
+
+def _explain(df) -> str:
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain(mode="formatted")
+    return buf.getvalue().rstrip()
+
+
+def write_plans_md(spark, registry, names) -> None:
     out = [
         "# PLANS — formatted physical plans of headline queries",
         "",
@@ -123,15 +146,58 @@ def main() -> None:
         "family.",
         "",
     ]
-    for name in QUERIES:
-        df = SPARK_QUERIES[name](spark, SF_DIR)
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain(mode="formatted")
-        out += [f"## {name}", "", "```", buf.getvalue().rstrip(), "```", ""]
-    with open(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md"), "w") as f:
+    for name in names:
+        out += [f"## {name}", "", "```", _explain(registry[name](spark, SF_DIR)), "```", ""]
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
-    print(f"wrote PLANS.md with {len(QUERIES)} plans")
+    print(f"wrote PLANS.md with {len(names)} plans")
+
+
+def write_plan_files(spark, registry, names, out_dir: str, suffix: str) -> None:
+    from bench import SF_DIR as sf_dir
+
+    os.makedirs(out_dir, exist_ok=True)
+    for name in names:
+        path = os.path.join(out_dir, f"{name}_{suffix}.txt")
+        with open(path, "w") as f:
+            f.write(_explain(registry[name](spark, sf_dir)) + "\n")
+        print(f"wrote {path}")
+
+
+def main() -> None:
+    args = sys.argv[1:]
+    vanilla = "--vanilla" in args
+    if vanilla:
+        args.remove("--vanilla")
+    if len(args) == 1 or (vanilla and not args):
+        print(USAGE, file=sys.stderr)
+        sys.exit(2)
+    if args:
+        from bench import BENCH_QUERIES
+
+        names = args[2:] or BENCH_QUERIES
+    else:
+        names = QUERIES
+
+    from aspep_etl_spark.plans.contract import SPARK_QUERIES
+
+    unknown = [n for n in names if n not in SPARK_QUERIES]
+    if unknown:
+        print(f"unknown queries: {unknown}\n{USAGE}", file=sys.stderr)
+        sys.exit(2)
+
+    if vanilla:
+        from pyspark.sql import SparkSession
+
+        spark = SparkSession.builder.appName("dump-plans").getOrCreate()
+    else:
+        from aspep_etl_spark.session import get_spark
+
+        spark = get_spark(app_name="dump-plans")
+    if args:
+        write_plan_files(spark, SPARK_QUERIES, names, args[0], args[1])
+    else:
+        write_plans_md(spark, SPARK_QUERIES, names)
     spark.stop()
 
 
